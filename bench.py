@@ -702,7 +702,13 @@ def _stream_ingest_bench(spark, sf_dir: str, reps: int = 3) -> float:
             q = stream_ingest_dedup(
                 stream, state, f"{rep_dir}/ckpt", DedupIngestConfig()
             )
-            q.awaitTermination(300)
+            # a timed-out run is never a sample: stop the query before its
+            # state dirs are removed, and report the failure instead
+            if not q.awaitTermination(300):
+                q.stop()
+                raise TimeoutError(
+                    f"stream ingest rep {rep} did not finish within 300 s"
+                )
             times.append(time.perf_counter() - t0)
             gc.collect()
         return round(statistics.median(times), 4)

@@ -498,10 +498,15 @@ def lsh_candidate_pairs_cross(
     and the incoming batch — the dedup an ingest pipeline runs per
     increment, where batch×batch and corpus×corpus pairs are out of scope
     (the corpus is already deduped; the batch self-join is a separate,
-    much smaller job). The corpus band table is the reusable "index": at
-    scale it is written once, partitioned by (band_idx, band_hash), and
-    every increment's (much smaller) band table shuffles against it —
-    cost per increment is corpus-index-probe, not corpus-rescan.
+    much smaller job). The corpus side is meant to be held, not
+    re-derived per increment: the streaming ingest
+    (``streaming/ingest_dedup.CorpusIndex``) keeps the corpus signatures
+    materialized in memory across triggers, extends them with each
+    increment's survivors, and rebuilds them from the stored corpus only
+    when the published corpus version moves under it. Both band tables are
+    exploded from the signatures inside each call; the corpus explode is a
+    map-side step of the probe's first stage, so holding the band rows as
+    well would save no job.
 
     Returns (doc_corpus, doc_batch, est_jaccard) for estimated Jaccard ≥
     ``est_threshold``. Ids on the two sides are assumed disjoint (caller

@@ -26,6 +26,7 @@ from dwh_etl_framework_spark.plans.config import (
 )
 from dwh_etl_framework_spark.plans.params import resolve_parameters
 from dwh_etl_framework_spark.plans.steps import StepContext, run_transform_steps
+from dwh_etl_framework_spark.session import release
 from dwh_etl_framework_spark.sources.registry import register_sources
 
 
@@ -50,6 +51,9 @@ class Pipeline:
     #: declared join_strategy (keyed by step alias) — the run's plan
     #: audit trail, surfaced for logging/inspection.
     last_join_decisions: dict = field(default_factory=dict)
+    #: what transform() runs pinned in memory (``StepContext.persisted``);
+    #: the lazy master reads it until :meth:`release_step_caches`.
+    step_caches: list = field(default_factory=list)
     _seqno: int = field(default=0)
 
     def spec(self) -> JournalSpec:
@@ -94,11 +98,20 @@ class Pipeline:
         )
         result = run_transform_steps(ctx, list(self.table.steps_for(read_mode)))
         self.last_join_decisions = dict(ctx.join_decisions)
+        self.step_caches.extend(ctx.persisted)
         if result is None:
             raise ValueError(
                 f"{read_mode!r} steps for {self.table.target!r} produced no DataFrame"
             )
         return result
+
+    def release_step_caches(self) -> None:
+        """Free the step caches and sketch checkpoints of earlier
+        transform() runs, without blocking. The master stays readable
+        from a persisted cache, since it recomputes from the sources; a
+        released ``local`` checkpoint cannot be read again."""
+        release(*self.step_caches)
+        self.step_caches.clear()
 
     # -- stage 3: journal write + merge -------------------------------------
     def write_journal(
@@ -245,23 +258,34 @@ def run_pipeline_config(
     underscores), so later tables can depend on earlier ones' outputs —
     the multi-table DWH layering (staging → marts) the reference's
     config.yaml encodes.
+
+    Once every table has run, the step caches of the tables that landed
+    are released: their rows are on disk, and a long-lived worker calling
+    this per refresh would otherwise pin each refresh's caches for good.
+    A table without ``landing`` keeps its caches, because its lazy master
+    is the only copy of the result and still reads them.
     """
     pipelines: dict[str, Pipeline] = {}
-    for table in config.tables:
-        pipe = Pipeline(
-            spark=spark,
-            table=table,
-            variable_resolver=variable_resolver,
-            sql_base_dir=sql_base_dir,
-            connections=dict(connections or {}),
-        )
-        master = pipe.run(
-            read_mode=read_mode,
-            write_mode=write_mode,
-            merge_mode=merge_mode,
-            transform_dt=transform_dt,
-        )
-        if master is not None:
-            master.createOrReplaceTempView(table.target.replace(".", "_"))
-        pipelines[table.target] = pipe
+    try:
+        for table in config.tables:
+            pipe = Pipeline(
+                spark=spark,
+                table=table,
+                variable_resolver=variable_resolver,
+                sql_base_dir=sql_base_dir,
+                connections=dict(connections or {}),
+            )
+            master = pipe.run(
+                read_mode=read_mode,
+                write_mode=write_mode,
+                merge_mode=merge_mode,
+                transform_dt=transform_dt,
+            )
+            if master is not None:
+                master.createOrReplaceTempView(table.target.replace(".", "_"))
+            pipelines[table.target] = pipe
+    finally:
+        for pipe in pipelines.values():
+            if pipe.table.landing and pipe.master is not None:
+                pipe.release_step_caches()
     return pipelines

@@ -57,6 +57,10 @@ class StepContext:
     #: the audit trail a pipeline run leaves of its sketch-driven plan
     #: choices.
     join_decisions: dict[str, object] = field(default_factory=dict)
+    #: DataFrames the steps pinned in memory (``persist``/``local``
+    #: checkpoints and the join planner's sketch checkpoints), for the
+    #: caller to release once nothing reads them (``session.release``).
+    persisted: list[DataFrame] = field(default_factory=list)
 
 
 def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
@@ -122,7 +126,9 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
                     f"w={sw} — the 'w' option cannot re-width persisted "
                     "counters"
                 )
-            return sk.localCheckpoint(eager=True), sw
+            sk = sk.localCheckpoint(eager=True)
+            ctx.persisted.append(sk)
+            return sk, sw
         if state_dir is not None:
             from dwh_etl_framework_spark.streaming.distinct import (
                 cms_state_width,
@@ -165,18 +171,15 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
     else:
         w = CMS_W
     # Phase 2: inline sides sketch at the resolved width.
-    lsk, lw = lp if lp is not None else (
-        cms_sketch(resolve(left).select(lkey), lkey, w).localCheckpoint(
+    def inline_sketch(name: str, key: str) -> tuple[DataFrame, int]:
+        sk = cms_sketch(resolve(name).select(key), key, w).localCheckpoint(
             eager=True
-        ),
-        w,
-    )
-    rsk, rw = rp if rp is not None else (
-        cms_sketch(resolve(right).select(rkey), rkey, w).localCheckpoint(
-            eager=True
-        ),
-        w,
-    )
+        )
+        ctx.persisted.append(sk)
+        return sk, w
+
+    lsk, lw = lp if lp is not None else inline_sketch(left, lkey)
+    rsk, rw = rp if rp is not None else inline_sketch(right, rkey)
     # width guard (ADVICE r10): cms_join_size inner-joins the two counter
     # tables on (r, col) — sketches at DIFFERENT widths silently drop
     # cells and UNDER-estimate the join size, violating the
@@ -339,18 +342,22 @@ def plan_step_join_order(ctx: StepContext, spec: Mapping) -> tuple:
 
 
 def checkpoint(df: DataFrame, ctx: StepContext, step_alias: str | None) -> DataFrame:
-    """Materialize a step result (F9)."""
+    """Materialize a step result (F9); in-memory results are recorded in
+    ``ctx.persisted``."""
     mode = ctx.checkpoint_mode
-    if mode == "persist":
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    if mode == "local":
-        return df.localCheckpoint(eager=True)
     if mode == "parquet":
         base = ctx.checkpoint_dir or "/tmp/dwh_etl_framework_spark/checkpoints"
         path = f"{base}/{step_alias or uuid.uuid4().hex}"
         df.write.mode("overwrite").parquet(path)
         return ctx.spark.read.parquet(path)
-    raise ValueError(f"unknown checkpoint mode {mode!r}")
+    if mode == "persist":
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    elif mode == "local":
+        df = df.localCheckpoint(eager=True)
+    else:
+        raise ValueError(f"unknown checkpoint mode {mode!r}")
+    ctx.persisted.append(df)
+    return df
 
 
 def run_select_step(ctx: StepContext, step: TransformStep) -> DataFrame:

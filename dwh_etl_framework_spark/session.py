@@ -20,11 +20,14 @@ import hashlib
 import os
 import tempfile
 import zipfile
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from pathlib import Path
-from typing import Iterator
+from typing import Callable, Iterator, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 #: Runtime confs that every query in this engine assumes. Applied both when
 #: we build the session ourselves and (where settable at runtime) when the
@@ -147,6 +150,48 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             pass
     ship_package(spark)
     return spark
+
+
+def fan_out(spark: SparkSession, *fns: Callable[[], T]) -> list[T]:
+    """Run independent driver-side calls on one pool thread each; return
+    their results in argument order.
+
+    Actions are sequential only because driver code calls them one after
+    another: submitting independent jobs from two threads lets the second
+    one's tasks back-fill executors freed by the first one's tail. In
+    pinned-thread py4j mode a bare pool thread maps to a fresh JVM thread
+    that inherits none of the caller's job-group/description properties,
+    so each call is wrapped with ``inheritable_thread_target``. In classic
+    mode that function returns the session itself (there is nothing to
+    inherit), so the calls then run unwrapped.
+    """
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    if wrap is spark or not callable(wrap):
+        wrap = lambda fn: fn  # noqa: E731 — classic mode
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(wrap(fn)) for fn in fns]
+        return [f.result() for f in futures]
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free, without blocking, what ``persist`` or ``localCheckpoint`` pinned
+    for each DataFrame (``None`` entries are skipped).
+
+    ``DataFrame.unpersist`` only reaches the cache manager; a local
+    checkpoint is a persisted RDD under a ``LogicalRDD`` leaf, released
+    through that RDD. A released checkpoint can no longer be read, so only
+    release what nothing still reads.
+    """
+    for df in dfs:
+        if df is None:
+            continue
+        plan = df._jdf.queryExecution().logical()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist(blocking=False)
 
 
 #: provider class for ``SessionFactory(state_store="rocksdb")`` —

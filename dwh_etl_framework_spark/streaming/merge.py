@@ -67,7 +67,7 @@ class StreamMasterState:
 
         return os.path.join(self.path, self._POINTER)
 
-    def _current_version(self) -> int | None:
+    def version(self) -> int | None:
         """The published version number, or None when no pointer exists.
 
         ONLY a genuinely absent pointer maps to None. A pointer that
@@ -99,7 +99,7 @@ class StreamMasterState:
 
         from pyspark.errors import AnalysisException
 
-        ver = self._current_version()
+        ver = self.version()
         if ver is not None:
             # published version: complete by protocol, any error propagates
             df = self.spark.read.parquet(os.path.join(self.path, f"_v{ver}"))
@@ -134,7 +134,7 @@ class StreamMasterState:
         # superseding (read-your-own-input); localCheckpoint breaks the
         # cycle and pins the rows.
         pinned = df.localCheckpoint(eager=True)
-        prev = self._current_version()
+        prev = self.version()
         nxt = (prev or 0) + 1
         target = os.path.join(self.path, f"_v{nxt}")
         if os.path.exists(target):  # orphan of a crashed attempt

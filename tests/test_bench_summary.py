@@ -218,3 +218,30 @@ def test_stream_ingest_error_reported_not_fatal():
     parsed = json.loads(line)
     assert parsed["stream_ingest_error"].startswith("RuntimeError")
     assert parsed["value"] is not None  # headline total unaffected
+
+
+def test_stream_ingest_timeout_stops_query_and_raises(spark, monkeypatch):
+    """A stream that does not finish is stopped and raises, so the caller
+    reports it in ``stream_ingest_error``; its wall time is never a
+    sample."""
+    import pytest
+
+    import bench
+    from conftest import SF_DIR
+    from dwh_etl_framework_spark.streaming import ingest_dedup
+
+    stopped = []
+
+    class StuckQuery:
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            stopped.append(True)
+
+    monkeypatch.setattr(
+        ingest_dedup, "stream_ingest_dedup", lambda *a, **k: StuckQuery()
+    )
+    with pytest.raises(TimeoutError, match="did not finish"):
+        bench._stream_ingest_bench(spark, SF_DIR, reps=1)
+    assert stopped == [True]

@@ -2,7 +2,8 @@
 the fold at EVERY write boundary inside EVERY micro-batch, re-deliver
 the crashed batch (foreachBatch at-least-once semantics: same batch id),
 finish the stream, and require the final state to equal the
-uninterrupted run — for cdc, ingest_dedup and entity_folds.
+uninterrupted run — for cdc, ingest_dedup (the batch fold and the
+stream's held-index trigger) and entity_folds.
 
 The kill points enumerate every partial-commit state a crash can leave:
 k=0 (nothing published), k=1 (first state published, rest lost), …,
@@ -25,6 +26,7 @@ from dwh_etl_framework_spark.streaming.entity_folds import (
     fold_entity_batch,
 )
 from dwh_etl_framework_spark.streaming.ingest_dedup import (
+    CorpusIndex,
     DedupIngestConfig,
     screen_batch,
 )
@@ -122,6 +124,22 @@ def _ingest_fold(states, batch, batch_id):
     state.write(merged)
 
 
+#: one held index per state path, living across the sweep's folds the
+#: way one query's index lives across its triggers
+_HELD: dict[str, CorpusIndex] = {}
+
+
+def _ingest_index_fold(states, batch, batch_id):
+    """The stream's own foreachBatch function: a crashed write leaves the
+    held index tagged with the still-published version, and a batch
+    re-delivered after a published write meets its own survivors in the
+    extended index."""
+    state = states[0]
+    _HELD.setdefault(state.path, CorpusIndex(state, _ING_CFG)).ingest(
+        batch, batch_id
+    )
+
+
 def _ingest_result(states):
     return sorted(r.doc_id for r in states[0].read().select("doc_id").collect())
 
@@ -208,6 +226,9 @@ def _scd2cms_result(states):
 OPS = {
     "cdc": (1, _cdc_batches, _cdc_fold, _cdc_result),
     "ingest_dedup": (1, _ingest_batches, _ingest_fold, _ingest_result),
+    "ingest_held_index": (
+        1, _ingest_batches, _ingest_index_fold, _ingest_result
+    ),
     "entity_folds": (2, _entity_batches, _entity_fold, _entity_result),
     "scd2_cms": (2, _scd2cms_batches, _scd2cms_fold, _scd2cms_result),
 }

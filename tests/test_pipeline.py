@@ -297,3 +297,55 @@ tables:
     transform: {{full: [{{sql: "SELECT 1 AS x"}}]}}
     functions: [{bad!r}]
 """))
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_refresh_releases_step_caches_of_landed_tables(spark, tmp_path):
+    """A ``cache: true`` step and the join planner's two sketch checkpoints
+    pin three RDDs per refresh. Once the config's tables have landed,
+    those are released, so repeated refreshes in one long-lived session
+    leave the persistent-RDD count flat; a table without ``landing`` keeps
+    its cache, because its lazy master still reads it."""
+    from dwh_etl_framework_spark.plans.pipeline import run_pipeline_config
+    from conftest import SF_DIR
+
+    def dep(alias):
+        return {"alias": alias, "format": "parquet",
+                "path": f"{SF_DIR}/{alias}.parquet"}
+
+    stg = {"type": "select", "alias": "stg", "cache": True, "sql": (
+        "SELECT l.l_partkey, l.l_quantity FROM lineitem l JOIN orders o "
+        "ON l.l_orderkey = o.o_orderkey")}
+    mart = {"type": "select", "join_strategy": {
+        "left": "stg", "right": "part",
+        "left_key": "l_partkey", "right_key": "p_partkey"}, "sql": (
+        "SELECT p.p_partkey, SUM(s.l_quantity) AS qty FROM stg s "
+        "JOIN part p ON s.l_partkey = p.p_partkey GROUP BY p.p_partkey")}
+    table = {"target": "mart.part_qty", "primary_key": ["p_partkey"],
+             "dependencies": [dep("lineitem"), dep("orders"), dep("part")],
+             "transform": {"full": [stg, mart]}}
+    landed = parse_pipeline_config({"tables": [
+        dict(table, landing={"path": str(tmp_path / "part_qty")})]})
+    before = _persistent_rdd_ids(spark)
+    counts = []
+    for _ in range(3):
+        pipes = run_pipeline_config(
+            spark, landed, transform_dt=datetime(2024, 1, 1)
+        )
+        counts.append(len(_persistent_rdd_ids(spark) - before))
+    assert counts == [0, 0, 0]
+    # the released caches were only caches: the master still reads
+    landed_rows = pipes["mart.part_qty"].master.count()
+    assert landed_rows == spark.read.parquet(str(tmp_path / "part_qty")).count()
+
+    unlanded = parse_pipeline_config({"tables": [table]})
+    pipes = run_pipeline_config(
+        spark, unlanded, transform_dt=datetime(2024, 1, 1)
+    )
+    kept = pipes["mart.part_qty"].step_caches
+    assert len(kept) == 3
+    assert pipes["mart.part_qty"].master.count() == landed_rows
+    pipes["mart.part_qty"].release_step_caches()

@@ -13,6 +13,10 @@ x50 incremental screen. Invariants:
 3. **Idempotent re-ingest**: replaying the same files against the
    existing corpus (fresh checkpoint, so every batch re-delivers) adds
    zero rows — the digest tier makes at-least-once delivery safe.
+4. **Held corpus index**: a query derives the corpus signatures once and
+   then extends its in-memory index trigger by trigger; a restarted query
+   or a write from outside the stream makes it rebuild from disk, and
+   either way the corpus equals the sequential ``screen_batch`` fold.
 """
 
 from __future__ import annotations
@@ -21,7 +25,9 @@ import os
 
 from pyspark.sql import functions as F
 
+from dwh_etl_framework_spark.operators import dedup
 from dwh_etl_framework_spark.streaming.ingest_dedup import (
+    CorpusIndex,
     DedupIngestConfig,
     screen_batch,
     stream_ingest_dedup,
@@ -70,6 +76,44 @@ def _ids(df):
     return sorted(r.doc_id for r in df.select("doc_id").collect())
 
 
+def _await(q, timeout=120):
+    """Wait for an availableNow query; a timeout stops it and fails."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(f"stream did not finish within {timeout} s")
+
+
+def _stream(spark, src):
+    return (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", True)
+        .parquet(src)
+    )
+
+
+def _fold(spark, cfg, slices, corpus=None):
+    """The sequential batch fold of ``screen_batch`` over ``slices``."""
+    for rows in slices:
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
+        survivors = screen_batch(corpus, batch, cfg).localCheckpoint()
+        corpus = survivors if corpus is None else corpus.unionByName(survivors)
+    return corpus
+
+
+def _count_signature_inputs(monkeypatch):
+    """Record the row count of every ``minhash_signatures`` input."""
+    sizes = []
+    real = dedup.minhash_signatures
+
+    def counting(df, *args, **kwargs):
+        sizes.append(df.count())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_signatures", counting)
+    return sizes
+
+
 def test_stream_ingest_equals_sequential_fold(spark, tmp_path):
     cfg = DedupIngestConfig()
     slices = _slices(spark)
@@ -95,7 +139,7 @@ def test_stream_ingest_equals_sequential_fold(spark, tmp_path):
     q = stream_ingest_dedup(
         stream, state, str(tmp_path / "ckpt"), cfg
     )
-    q.awaitTermination(120)
+    _await(q)
     got = _ids(state.read())
 
     assert got == expected
@@ -118,5 +162,100 @@ def test_stream_ingest_equals_sequential_fold(spark, tmp_path):
         str(tmp_path / "ckpt2"),
         cfg,
     )
-    q2.awaitTermination(120)
+    _await(q2)
     assert _ids(state.read()) == got
+
+
+def test_growing_corpus_derives_corpus_signatures_once(
+    spark, tmp_path, monkeypatch
+):
+    """Four triggers grow a seeded corpus. The corpus-side signatures are
+    derived once for the query, when its first trigger builds the index;
+    every later trigger extends the index with its survivors' rows, so
+    the other signature inputs are the batches alone."""
+    cfg = DedupIngestConfig()
+    slices = _slices(spark)
+    src = str(tmp_path / "src")
+    _write_slices(spark, slices, src)
+    seed = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id").between(100, 139))
+    )
+    state = StreamMasterState(spark, str(tmp_path / "corpus"))
+    state.write(seed)
+    sizes = _count_signature_inputs(monkeypatch)
+    q = stream_ingest_dedup(_stream(spark, src), state, str(tmp_path / "c"), cfg)
+    _await(q)
+    triggers = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(triggers) == 4
+    assert state.version() == 5  # the seed plus one write per trigger
+    largest_batch = max(len(rows) for rows in slices)
+    assert [n for n in sizes if n > largest_batch] == [40]
+    assert len(sizes) == 1 + len(triggers)
+    monkeypatch.undo()
+    assert _ids(state.read()) == _ids(_fold(spark, cfg, slices, corpus=seed))
+
+
+def test_restarted_query_rebuilds_index_from_disk(
+    spark, tmp_path, monkeypatch
+):
+    """A second query over the same state with a fresh checkpoint starts
+    with an empty held index: it rebuilds from the stored corpus, and the
+    corpus ends equal to an uninterrupted run (the sequential fold, which
+    the replay test pins to the stream)."""
+    cfg = DedupIngestConfig()
+    slices = _slices(spark)
+    first, full = str(tmp_path / "first"), str(tmp_path / "full")
+    _write_slices(spark, slices[:2], first)
+    _write_slices(spark, slices, full)
+    state = StreamMasterState(spark, str(tmp_path / "corpus"))
+    _await(stream_ingest_dedup(
+        _stream(spark, first), state, str(tmp_path / "c1"), cfg
+    ))
+    stored = state.read().count()
+    sizes = _count_signature_inputs(monkeypatch)
+    _await(stream_ingest_dedup(
+        _stream(spark, full), state, str(tmp_path / "c2"), cfg
+    ))
+    largest_batch = max(len(rows) for rows in slices)
+    assert [n for n in sizes if n > largest_batch] == [stored]
+    monkeypatch.undo()
+    assert _ids(state.read()) == _ids(_fold(spark, cfg, slices))
+
+
+def test_outside_write_between_triggers_forces_rebuild(spark, tmp_path):
+    """A ``StreamMasterState.write`` from outside the stream moves the
+    published version past the held index's tag, so the next trigger
+    rebuilds from disk and screens against the outside rows too. The
+    triggers call the query's own foreachBatch function directly, which
+    is what puts the outside write between two of them."""
+    cfg = DedupIngestConfig()
+    slices = _slices(spark)
+    # 2001 is an exact copy of a doc that slice 3 ships later
+    outside = [(2000, "an outside write lands here " * 4),
+               (2001, slices[3][1][1])]
+    state = StreamMasterState(spark, str(tmp_path / "corpus"))
+    index = CorpusIndex(state, cfg)
+
+    def trigger(i):
+        batch = spark.createDataFrame(slices[i], "doc_id long, text string")
+        index.ingest(batch, i)
+        assert index.version == state.version()
+
+    trigger(0)
+    trigger(1)
+    state.write(state.read().unionByName(
+        spark.createDataFrame(outside, "doc_id long, text string")
+    ))
+    assert state.version() == 3 != index.version
+    trigger(2)
+    trigger(3)
+    got = _ids(state.read())
+    assert 2001 in got and slices[3][1][0] not in got
+    assert index.rows.count() == len(got)
+
+    expected = _fold(spark, cfg, slices[:2]).unionByName(
+        spark.createDataFrame(outside, "doc_id long, text string")
+    )
+    assert got == _ids(_fold(spark, cfg, slices[2:], corpus=expected))
