@@ -153,6 +153,12 @@ def merge_full(journal: DataFrame, spec: JournalSpec) -> DataFrame:
     return latest_per_key(journal, spec)
 
 
+def empty_master(journal: DataFrame) -> DataFrame:
+    """An empty master with the journal's payload schema (the journal
+    minus its system columns): what the first delta merge upserts into."""
+    return journal.limit(0).drop(*SYSTEM_COLS)
+
+
 def merge_delta(
     master: DataFrame, journal: DataFrame, spec: JournalSpec
 ) -> DataFrame:

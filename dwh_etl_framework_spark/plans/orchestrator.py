@@ -29,7 +29,11 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 
 from dwh_etl_framework_spark.plans.config import PipelineConfig
-from dwh_etl_framework_spark.plans.pipeline import Pipeline
+from dwh_etl_framework_spark.plans.pipeline import (
+    Pipeline,
+    _refresh_table,
+    _release_landed,
+)
 
 
 @dataclass(frozen=True)
@@ -83,22 +87,17 @@ def build_table_tasks(
             upstream = (prev_target,) if prev_target is not None else ()
 
         def fn(table=table) -> Pipeline:
-            pipe = Pipeline(
-                spark=spark,
-                table=table,
-                variable_resolver=variable_resolver,
-                sql_base_dir=sql_base_dir,
-                connections=dict(connections or {}),
-            )
-            master = pipe.run(
+            return _refresh_table(
+                spark,
+                table,
+                variable_resolver,
+                sql_base_dir,
+                connections,
                 read_mode=read_mode,
                 write_mode=write_mode,
                 merge_mode=merge_mode,
                 transform_dt=transform_dt,
             )
-            if master is not None:
-                master.createOrReplaceTempView(_task_id(table.target))
-            return pipe
 
         tasks.append(
             TaskDef(
@@ -117,17 +116,22 @@ def run_tasks(tasks: Sequence[TaskDef]) -> dict[str, Pipeline]:
 
     Deterministic: among ready tasks, declaration order wins. Raises on
     cycles (with the stuck task ids) instead of silently dropping tables.
+    Once the DAG has finished, the step caches of the tables that landed
+    are released, as in ``run_pipeline_config``.
     """
     done: dict[str, Pipeline] = {}
     pending = list(tasks)
-    while pending:
-        ready = [t for t in pending if all(u in done for u in t.upstream)]
-        if not ready:
-            stuck = [t.task_id for t in pending]
-            raise ValueError(f"dependency cycle among tasks: {stuck}")
-        for t in ready:
-            done[t.target] = t.fn()
-            pending.remove(t)
+    try:
+        while pending:
+            ready = [t for t in pending if all(u in done for u in t.upstream)]
+            if not ready:
+                stuck = [t.task_id for t in pending]
+                raise ValueError(f"dependency cycle among tasks: {stuck}")
+            for t in ready:
+                done[t.target] = t.fn()
+                pending.remove(t)
+    finally:
+        _release_landed(done.values())
     return done
 
 

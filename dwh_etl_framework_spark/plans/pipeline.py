@@ -8,12 +8,14 @@ An Airflow/cron wrapper can call these methods 1:1.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from dwh_etl_framework_spark.operators.merge import (
     JournalSpec,
+    empty_master,
     flip_journal_state,
     merge_delta,
     merge_full,
@@ -42,7 +44,6 @@ class Pipeline:
     spark: SparkSession
     table: TableConfig
     variable_resolver: object = None
-    checkpoint_mode: str = "persist"
     sql_base_dir: str | None = None  # sql_file step paths resolve against this
     connections: dict = field(default_factory=dict)  # F8/F25 jdbc registry
     journal: DataFrame | None = None
@@ -54,7 +55,6 @@ class Pipeline:
     #: what transform() runs pinned in memory (``StepContext.persisted``);
     #: the lazy master reads it until :meth:`release_step_caches`.
     step_caches: list = field(default_factory=list)
-    _seqno: int = field(default=0)
 
     def spec(self) -> JournalSpec:
         if not self.table.primary_key:
@@ -93,7 +93,6 @@ class Pipeline:
             ),
             dataframes=dict(),
             sql_base_dir=self.sql_base_dir,
-            checkpoint_mode=self.checkpoint_mode,
             connections=self.connections,
         )
         result = run_transform_steps(ctx, list(self.table.steps_for(read_mode)))
@@ -141,7 +140,6 @@ class Pipeline:
         if prev is not None and now <= prev:
             now = prev + timedelta(microseconds=1)
         self._last_load_dt = now
-        self._seqno += 1  # write counter (kept for observability)
         stamped = stamp_journal_columns(df, transform_dt, load_dt=now)
         if write_mode == "overwrite" or self.journal is None:
             self.journal = stamped
@@ -159,11 +157,9 @@ class Pipeline:
         if merge_mode == "full":
             self.master = merge_full(self.journal, spec)
         else:
-            base = (
-                self.master
-                if self.master is not None
-                else self.journal.limit(0).drop("__rnk", *_system_cols())
-            )
+            base = self.master
+            if base is None:
+                base = empty_master(self.journal)
             self.master = merge_delta(base, self.journal, spec)
         self.journal = flip_journal_state(self.journal)
         return self.master
@@ -234,10 +230,39 @@ class Pipeline:
             write_table(master, spec["path"], **kwargs)
 
 
-def _system_cols() -> list[str]:
-    from dwh_etl_framework_spark.operators.merge import SYSTEM_COLS
+def _refresh_table(
+    spark: SparkSession,
+    table: TableConfig,
+    variable_resolver=None,
+    sql_base_dir: str | None = None,
+    connections: dict | None = None,
+    **run_kwargs,
+) -> Pipeline:
+    """One table's refresh: run its :class:`Pipeline` and publish the
+    master as a temp view named after the target (dots → underscores), so
+    later tables can read it."""
+    pipe = Pipeline(
+        spark=spark,
+        table=table,
+        variable_resolver=variable_resolver,
+        sql_base_dir=sql_base_dir,
+        connections=dict(connections or {}),
+    )
+    master = pipe.run(**run_kwargs)
+    if master is not None:
+        master.createOrReplaceTempView(table.target.replace(".", "_"))
+    return pipe
 
-    return list(SYSTEM_COLS)
+
+def _release_landed(pipelines: Iterable[Pipeline]) -> None:
+    """Release the step caches of the tables that landed: their rows are
+    on disk, and a long-lived worker refreshing repeatedly would otherwise
+    pin each refresh's caches for good. A table without ``landing`` keeps
+    its caches, because its lazy master is the only copy of the result and
+    still reads them."""
+    for pipe in pipelines:
+        if pipe.table.landing and pipe.master is not None:
+            pipe.release_step_caches()
 
 
 def run_pipeline_config(
@@ -257,35 +282,23 @@ def run_pipeline_config(
     master is registered as a temp view named after its target (dots →
     underscores), so later tables can depend on earlier ones' outputs —
     the multi-table DWH layering (staging → marts) the reference's
-    config.yaml encodes.
-
-    Once every table has run, the step caches of the tables that landed
-    are released: their rows are on disk, and a long-lived worker calling
-    this per refresh would otherwise pin each refresh's caches for good.
-    A table without ``landing`` keeps its caches, because its lazy master
-    is the only copy of the result and still reads them.
+    config.yaml encodes. Once every table has run, the step caches of the
+    tables that landed are released (``_release_landed``).
     """
     pipelines: dict[str, Pipeline] = {}
     try:
         for table in config.tables:
-            pipe = Pipeline(
-                spark=spark,
-                table=table,
-                variable_resolver=variable_resolver,
-                sql_base_dir=sql_base_dir,
-                connections=dict(connections or {}),
-            )
-            master = pipe.run(
+            pipelines[table.target] = _refresh_table(
+                spark,
+                table,
+                variable_resolver,
+                sql_base_dir,
+                connections,
                 read_mode=read_mode,
                 write_mode=write_mode,
                 merge_mode=merge_mode,
                 transform_dt=transform_dt,
             )
-            if master is not None:
-                master.createOrReplaceTempView(table.target.replace(".", "_"))
-            pipelines[table.target] = pipe
     finally:
-        for pipe in pipelines.values():
-            if pipe.table.landing and pipe.master is not None:
-                pipe.release_step_caches()
+        _release_landed(pipelines.values())
     return pipelines

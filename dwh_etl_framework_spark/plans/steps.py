@@ -63,6 +63,16 @@ class StepContext:
     persisted: list[DataFrame] = field(default_factory=list)
 
 
+def _resolve(ctx: StepContext, name: str) -> DataFrame:
+    df = ctx.dataframes.get(name)
+    return df if df is not None else ctx.spark.table(name)
+
+
+def _bind(ctx: StepContext, name: str, df: DataFrame) -> None:
+    df.createOrReplaceTempView(name)
+    ctx.dataframes[name] = df
+
+
 def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
     """Sketch-driven join planning for a select step (the x105 decision
     at the pipeline-config surface; see ``TransformStep.join_strategy``).
@@ -101,10 +111,6 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
         cms_sketch,
     )
 
-    def resolve(name: str) -> DataFrame:
-        df = ctx.dataframes.get(name)
-        return df if df is not None else ctx.spark.table(name)
-
     def persisted_sketch(
         name: str, key: str, state_dir: str | None, table_path: str | None
     ) -> tuple[DataFrame, int | None] | None:
@@ -119,17 +125,8 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
             from dwh_etl_framework_spark.sources.sinks import read_table_sketch
 
             sk, sw = read_table_sketch(ctx.spark, table_path, key)
-            if "w" in spec and int(spec["w"]) != sw:
-                raise ValueError(
-                    f"join_strategy asks w={spec['w']} but the landed "
-                    f"sketch for {name!r} ({table_path!r}) was written at "
-                    f"w={sw} — the 'w' option cannot re-width persisted "
-                    "counters"
-                )
-            sk = sk.localCheckpoint(eager=True)
-            ctx.persisted.append(sk)
-            return sk, sw
-        if state_dir is not None:
+            source = f"landed sketch at {table_path!r}"
+        elif state_dir is not None:
             from dwh_etl_framework_spark.streaming.distinct import (
                 cms_state_width,
                 current_cms,
@@ -144,14 +141,19 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
                     f"sketch yet for view {name!r}"
                 )
             sw = cms_state_width(st)
-            if "w" in spec and sw is not None and int(spec["w"]) != sw:
-                raise ValueError(
-                    f"join_strategy asks w={spec['w']} but the folded state "
-                    f"for {name!r} ({state_dir!r}) was built at w={sw} — "
-                    "the 'w' option cannot re-width persisted counters"
-                )
-            return sk, sw
-        return None
+            source = f"folded state at {state_dir!r}"
+        else:
+            return None
+        if "w" in spec and sw is not None and int(spec["w"]) != sw:
+            raise ValueError(
+                f"join_strategy asks w={spec['w']} but the {source} for "
+                f"{name!r} was built at w={sw} — the 'w' option cannot "
+                "re-width persisted counters"
+            )
+        if table_path is not None:
+            sk = sk.localCheckpoint(eager=True)
+            ctx.persisted.append(sk)
+        return sk, sw
 
     left, right = spec["left"], spec["right"]
     lkey, rkey = spec["left_key"], spec["right_key"]
@@ -172,9 +174,8 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
         w = CMS_W
     # Phase 2: inline sides sketch at the resolved width.
     def inline_sketch(name: str, key: str) -> tuple[DataFrame, int]:
-        sk = cms_sketch(resolve(name).select(key), key, w).localCheckpoint(
-            eager=True
-        )
+        sk = cms_sketch(_resolve(ctx, name).select(key), key, w)
+        sk = sk.localCheckpoint(eager=True)
         ctx.persisted.append(sk)
         return sk, w
 
@@ -216,24 +217,22 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
         parallelism=int(par) if par is not None else None,
     )
     if decision.strategy == "broadcast_left":
-        shaped = {left: F.broadcast(resolve(left))}
+        shaped = {left: F.broadcast(_resolve(ctx, left))}
     elif decision.strategy == "broadcast_right":
-        shaped = {right: F.broadcast(resolve(right))}
+        shaped = {right: F.broadcast(_resolve(ctx, right))}
     else:
         n = decision.shuffle_partitions
         shaped = {
-            left: resolve(left).repartition(n, F.col(lkey)),
-            right: resolve(right).repartition(n, F.col(rkey)),
+            left: _resolve(ctx, left).repartition(n, F.col(lkey)),
+            right: _resolve(ctx, right).repartition(n, F.col(rkey)),
         }
-    originals = {name: resolve(name) for name in shaped}
+    originals = {name: _resolve(ctx, name) for name in shaped}
     for name, df in shaped.items():
-        df.createOrReplaceTempView(name)
-        ctx.dataframes[name] = df
+        _bind(ctx, name, df)
 
     def restore() -> None:
         for name, df in originals.items():
-            df.createOrReplaceTempView(name)
-            ctx.dataframes[name] = df
+            _bind(ctx, name, df)
 
     return decision, restore
 
@@ -262,10 +261,10 @@ def plan_step_join_order(ctx: StepContext, spec: Mapping) -> tuple:
     restores/drops it after the step's SQL is analyzed. Returns
     ``(order_decision, restore)``.
 
-    Two spec forms:
+    Two spec forms, built by one join loop:
 
     - three-table (``left``/``mid``/``right`` + tables + keys) — the
-      pairwise x109 decision;
+      pairwise x109 decision, rewritten as a 3-element chain;
     - ``chain: [{view, table, right_key[, left_key]}, …]`` for ANY
       chain length — the x110 interval DP
       (``choose_chain_join_order_from_metadata``); each element's
@@ -280,60 +279,49 @@ def plan_step_join_order(ctx: StepContext, spec: Mapping) -> tuple:
         choose_join_order_from_metadata,
     )
 
-    def resolve(name: str) -> DataFrame:
-        df = ctx.dataframes.get(name)
-        return df if df is not None else ctx.spark.table(name)
-
+    elems = spec.get("chain") or [
+        {"view": spec["left"], "table": spec["left_table"],
+         "right_key": spec["left_key"]},
+        {"view": spec["mid"], "table": spec["mid_table"],
+         "left_key": spec["mid_left_key"], "right_key": spec["mid_right_key"]},
+        {"view": spec["right"], "table": spec["right_table"],
+         "left_key": spec["right_key"]},
+    ]
+    last = len(elems) - 1
+    tabs = [
+        (e["table"],)
+        + ((e["left_key"],) if i > 0 else ())
+        + ((e["right_key"],) if i < last else ())
+        for i, e in enumerate(elems)
+    ]
     if "chain" in spec:
-        elems = spec["chain"]
-        tabs: list[tuple] = []
-        for i, e in enumerate(elems):
-            if i == 0:
-                tabs.append((e["table"], e["right_key"]))
-            elif i == len(elems) - 1:
-                tabs.append((e["table"], e["left_key"]))
-            else:
-                tabs.append((e["table"], e["left_key"], e["right_key"]))
         order = choose_chain_join_order_from_metadata(ctx.spark, tabs)
-        dfs = [resolve(e["view"]) for e in elems]
         seq = order["order"]
-        chain = dfs[seq[0]]
-        lo = hi = seq[0]
-        for t in seq[1:]:
-            edge = t if t < lo else t - 1  # the chain edge being joined
-            cond = (
-                dfs[edge][elems[edge]["right_key"]]
-                == dfs[edge + 1][elems[edge + 1]["left_key"]]
-            )
-            chain = chain.join(dfs[t], cond)
-            lo, hi = min(lo, t), max(hi, t)
     else:
-        order = choose_join_order_from_metadata(
-            ctx.spark,
-            (spec["left_table"], spec["left_key"]),
-            (spec["mid_table"], spec["mid_left_key"], spec["mid_right_key"]),
-            (spec["right_table"], spec["right_key"]),
+        order = choose_join_order_from_metadata(ctx.spark, *tabs)
+        seq = [0, 1, 2] if order["chosen"] == "lm_first" else [1, 2, 0]
+    # left-deep build in ``seq`` order: each new table joins the chain
+    # across the one edge linking it to the interval built so far
+    dfs = [_resolve(ctx, e["view"]) for e in elems]
+    chain = dfs[seq[0]]
+    lo = seq[0]
+    for t in seq[1:]:
+        edge = t if t < lo else t - 1  # the chain edge being joined
+        cond = (
+            dfs[edge][elems[edge]["right_key"]]
+            == dfs[edge + 1][elems[edge + 1]["left_key"]]
         )
-        left = resolve(spec["left"])
-        mid = resolve(spec["mid"])
-        right = resolve(spec["right"])
-        cond_lm = left[spec["left_key"]] == mid[spec["mid_left_key"]]
-        cond_mr = mid[spec["mid_right_key"]] == right[spec["right_key"]]
-        if order["chosen"] == "lm_first":
-            chain = left.join(mid, cond_lm).join(right, cond_mr)
-        else:
-            chain = mid.join(right, cond_mr).join(left, cond_lm)
+        chain = chain.join(dfs[t], cond)
+        lo = min(lo, t)
 
     name = spec["as"]
     had_prior = name in ctx.dataframes
     prior = ctx.dataframes.get(name)
-    chain.createOrReplaceTempView(name)
-    ctx.dataframes[name] = chain
+    _bind(ctx, name, chain)
 
     def restore() -> None:
         if had_prior:
-            prior.createOrReplaceTempView(name)
-            ctx.dataframes[name] = prior
+            _bind(ctx, name, prior)
         else:
             ctx.spark.catalog.dropTempView(name)
             ctx.dataframes.pop(name, None)
@@ -441,17 +429,15 @@ def run_select_step(ctx: StepContext, step: TransformStep) -> DataFrame:
         # against broadcast-hinted/repartitioned views (ADVICE r10)
         for restore in reversed(restores):
             restore()
-    if step.cache or step.cache_dir:
-        if step.cache_dir:
-            # explicit cache_dir forces a durable parquet checkpoint, like the
-            # reference's ORC dump dir (airflow_etl.py:573-575)
-            local = replace(ctx, checkpoint_mode="parquet", checkpoint_dir=step.cache_dir)
-            df = checkpoint(df, local, step.alias)
-        else:
-            df = checkpoint(df, ctx, step.alias)
+    if step.cache_dir:
+        # explicit cache_dir forces a durable parquet checkpoint, like the
+        # reference's ORC dump dir (airflow_etl.py:573-575)
+        local = replace(ctx, checkpoint_mode="parquet", checkpoint_dir=step.cache_dir)
+        df = checkpoint(df, local, step.alias)
+    elif step.cache:
+        df = checkpoint(df, ctx, step.alias)
     if step.alias:
-        df.createOrReplaceTempView(step.alias)
-        ctx.dataframes[step.alias] = df
+        _bind(ctx, step.alias, df)
     return df
 
 
@@ -478,8 +464,7 @@ def run_python_step(ctx: StepContext, step: TransformStep) -> DataFrame:
         ) from None
     df = fn(ctx.spark, dict(ctx.dataframes))
     if step.alias:
-        df.createOrReplaceTempView(step.alias)
-        ctx.dataframes[step.alias] = df
+        _bind(ctx, step.alias, df)
     return df
 
 

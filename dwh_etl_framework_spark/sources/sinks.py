@@ -11,11 +11,39 @@ Reference parity (SURVEY.md §2a):
   at 100 TB the thing that matters is emitting sanely-sized files, so the
   writer repartitions by the partition columns (or to a target partition
   count) before writing.
+
+Landed metadata: one commit protocol. A metadata landing writes the data
+and then statistics beside it in a hidden directory of the table
+(``_sketches/`` here, ``_zonemaps/`` in ``sources/zonemaps.py``). The two
+writes are not one atomic commit, so every landing path runs them inside
+one marker bracket (:func:`_commit`): touch ``<meta dir>/_pending_<id>``,
+write the data, write the metadata, then delete the marker or raise. A
+crash inside the bracket leaves the marker, and every reader of that tier
+refuses while one exists, so a crashed landing is never served silently.
+A full overwrite touches the marker right after its data write, because
+that write wipes the metadata directory with the rest of the table (a crash
+before it leaves no metadata, which is loud already). Single-partition
+landings replace one hive partition under dynamic partition-overwrite
+inside the same bracket (:func:`_overwrite_one_partition`).
+
+The width rule for CMS fragments: an overwrite lands at ``w``, or at
+``CMS_W`` when ``w`` is omitted, and reads no landed width. An append or a
+partition landing that omits ``w`` adopts the width the key's landed
+fragments carry (``CMS_W`` when the key has none), so one key's fragments
+always merge. An explicit ``w`` on append is used as given (a conflicting
+one then makes readers refuse ``mixed widths``); a partition landing
+refuses an explicit ``w`` that conflicts with the landed width.
 """
 
 from __future__ import annotations
 
+import math
+import uuid
+from collections.abc import Callable, Collection, Mapping
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def write_table(
@@ -58,10 +86,10 @@ def overwrite_table(df: DataFrame, path: str, fmt: str = "parquet", **kwargs) ->
 #: convention as ``_SUCCESS``/``_metadata``).
 SKETCH_DIR = "_sketches"
 
-#: commit-intent marker (``_sketches/_pending_<id>``): present from just
-#: before a sketched write's first side effect until every fragment has
-#: landed. Readers REFUSE while one exists — a crashed write can therefore
-#: never serve an undercounting sketch silently (ADVICE r11 #1).
+#: commit-intent marker (``<meta dir>/_pending_<id>``): present from just
+#: before a landing's first side effect until every fragment has landed.
+#: Readers REFUSE while one exists — a crashed write can therefore never
+#: serve an undercounting sketch silently (ADVICE r11 #1).
 PENDING_PREFIX = "_pending_"
 
 #: erasure tombstone (``_sketches/<col>__hll_invalidated``): the HLL NDV
@@ -73,14 +101,20 @@ PENDING_PREFIX = "_pending_"
 HLL_TOMBSTONE_SUFFIX = "__hll_invalidated"
 
 
+def _hadoop_fs(spark, path: str):
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _touch(spark, path: str) -> None:
     fs, p = _hadoop_fs(spark, path)
     fs.create(p, True).close()
 
 
-def _sketch_markers(spark, path: str) -> tuple[list[str], list[str]]:
-    """(pending write markers, HLL erasure tombstones) under _sketches/."""
-    fs, p = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}")
+def _markers(spark, meta_dir: str) -> tuple[list[str], list[str]]:
+    """(pending write markers, HLL erasure tombstones) in ``meta_dir``."""
+    fs, p = _hadoop_fs(spark, meta_dir)
     if not fs.exists(p):
         return [], []
     names = [
@@ -92,15 +126,182 @@ def _sketch_markers(spark, path: str) -> tuple[list[str], list[str]]:
     )
 
 
-def _refuse_if_pending(spark, path: str) -> None:
-    pending, _ = _sketch_markers(spark, path)
+def _refuse_if_pending(
+    spark,
+    path: str,
+    meta: str = SKETCH_DIR,
+    repair: str = "Run rebuild_table_sketches() to rescan and republish.",
+) -> list[str]:
+    """Raise while a landing into ``<path>/<meta>`` is unpublished;
+    otherwise return the tier's erasure tombstones."""
+    pending, tombstones = _markers(spark, f"{path}/{meta}")
     if pending:
         raise IOError(
-            f"sketch metadata at {path!r} is inconsistent: a sketched write "
-            f"crashed before publishing ({pending}) — the data directory "
-            "may contain rows the sketches don't cover. Re-run "
-            "rebuild_table_sketches() to rescan and republish."
+            f"{meta} metadata at {path!r} is inconsistent: a landing "
+            f"crashed mid-span ({pending}) — the data directory may hold "
+            f"rows the metadata does not describe. {repair}"
         )
+    return tombstones
+
+
+def _commit(
+    spark,
+    meta_dir: str,
+    write_data: Callable[[], None],
+    write_meta: Callable[[], None],
+    data_wipes_meta: bool = False,
+) -> None:
+    """The marker bracket (module docstring): the marker exists from
+    before the first side effect that leaves data without matching
+    metadata until the metadata has landed. On an exception it stays."""
+    marker = f"{meta_dir}/{PENDING_PREFIX}{uuid.uuid4().hex}"
+    if not data_wipes_meta:
+        _touch(spark, marker)
+    write_data()
+    if data_wipes_meta:
+        _touch(spark, marker)
+    write_meta()
+    fs, p = _hadoop_fs(spark, marker)
+    if fs.exists(p) and not fs.delete(p, False):
+        raise IOError(f"failed to clear the pending marker {marker}")
+
+
+def _overwrite_one_partition(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str],
+    meta_dir: str,
+    write_meta: Callable[[object], None],
+    fmt: str = "parquet",
+    what: str = "partition",
+):
+    """Land ``df``, which must hold exactly one combination of
+    ``partition_by`` values, over that hive partition alone, then
+    ``write_meta(combination)`` — both inside the marker bracket. Spark's
+    dynamic partition-overwrite mode is set for the data write and
+    restored after it. Returns the combination row."""
+    spark = df.sparkSession
+    combos = df.select(*partition_by).distinct().collect()
+    if len(combos) != 1:
+        raise ValueError(
+            f"df holds {len(combos)} distinct {partition_by} combinations "
+            f"— a {what} landing lands exactly one {what} per call (split "
+            f"the input by {what} first)"
+        )
+
+    def write_data() -> None:
+        conf = "spark.sql.sources.partitionOverwriteMode"
+        previous = spark.conf.get(conf, "static")
+        spark.conf.set(conf, "dynamic")
+        try:
+            write_table(
+                df, path, fmt=fmt, mode="overwrite", partition_by=partition_by
+            )
+        finally:
+            spark.conf.set(conf, previous)
+
+    _commit(spark, meta_dir, write_data, lambda: write_meta(combos[0]))
+    return combos[0]
+
+
+def _fragments(spark, path: str, name: str) -> DataFrame:
+    # recursive: erasure_<id> and part_<...> fragments live in
+    # subdirectories next to the top-level ones
+    return spark.read.option("recursiveFileLookup", "true").parquet(
+        f"{path}/{SKETCH_DIR}/{name}"
+    )
+
+
+def _one_width(widths: list, path: str, col: str) -> int:
+    if len(widths) != 1:
+        raise ValueError(
+            f"sketch fragments for {col!r} at {path!r} carry mixed widths "
+            f"{sorted(widths)} — rebuild_table_sketches(w=...) rewrites "
+            "them at one width"
+        )
+    return int(widths[0])
+
+
+def _landed_width(spark, path: str, col: str) -> int | None:
+    """The ``__cms_w`` the landed CMS fragments of ``col`` carry, or None
+    when the key has no fragment directory. Read errors propagate; mixed
+    widths raise, because such fragments do not merge."""
+    fs, p = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}/{col}")
+    if not fs.exists(p):
+        return None
+    rows = _fragments(spark, path, col).select("__cms_w").distinct().collect()
+    return _one_width([r[0] for r in rows], path, col)
+
+
+def _fragment_widths(
+    spark, path: str, keys: list[str], w: int | None, mode: str
+) -> dict[str, int]:
+    """Per-key CMS width under the width rule (module docstring);
+    ``mode`` is ``overwrite``, ``append`` or ``partition``."""
+    from dwh_etl_framework_spark.operators.sketch import CMS_W
+
+    widths = {}
+    for col in keys:
+        landed = None
+        if mode == "partition" or (mode == "append" and w is None):
+            landed = _landed_width(spark, path, col)
+        if w is not None and landed is not None and int(w) != landed:
+            raise ValueError(
+                f"explicit w={w} conflicts with the landed width "
+                f"{landed} for {col!r} at {path!r}"
+            )
+        widths[col] = int(w or landed or CMS_W)
+    return widths
+
+
+def _write_key_fragments(
+    df: DataFrame,
+    path: str,
+    widths: Mapping[str, int],
+    mode: str,
+    sub: str = "",
+    tombstones: Collection[str] | None = None,
+) -> None:
+    """Per key: the CMS fragment (tagged ``__cms_w``) at
+    ``_sketches/<col><sub>``, then the HLL fragment at
+    ``_sketches/<col>__hll<sub>`` unless an erasure tombstoned the key's
+    NDV tier. ``tombstones`` defaults to the ones on disk now."""
+    from dwh_etl_framework_spark.operators.sketch import (
+        cms_sketch,
+        hll_registers,
+    )
+
+    if tombstones is None:
+        _, tombstones = _markers(df.sparkSession, f"{path}/{SKETCH_DIR}")
+    for col, w in widths.items():
+        sk = cms_sketch(df.select(col), col, w).withColumn(
+            "__cms_w", F.lit(w)
+        )
+        sk.coalesce(1).write.mode(mode).parquet(
+            f"{path}/{SKETCH_DIR}/{col}{sub}"
+        )
+        if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
+            continue  # see write_table_with_sketches "Erasure interplay"
+        # NDV tier: per-key HLL registers (MAX-mergeable, so appended
+        # fragments merge-on-read like the CMS counters SUM). NDV feeds
+        # the System-R join-output estimate (:func:`ndv_join_estimate`)
+        # — the TIGHT companion to the CMS inner product's SAFE bound.
+        regs = hll_registers(df.select(col), [], col)
+        regs.coalesce(1).write.mode(mode).parquet(
+            f"{path}/{SKETCH_DIR}/{col}__hll{sub}"
+        )
+
+
+def _key_dirs(spark, path: str) -> list[str]:
+    """The ``_sketches/`` child dirs of the keys (HLL siblings excluded)."""
+    fs, hpath = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}")
+    if not fs.exists(hpath):
+        return []
+    return sorted(
+        st.getPath().getName()
+        for st in fs.listStatus(hpath)
+        if st.isDirectory() and not st.getPath().getName().endswith("__hll")
+    )
 
 
 def write_table_with_sketches(
@@ -119,14 +320,11 @@ def write_table_with_sketches(
     new table's sketch — the sketch directory always describes exactly
     the data directory's content.
 
-    Crash consistency (ADVICE r11 #1): the data write and the sketch
-    writes are not one atomic commit, so a ``_pending_<id>`` marker
-    brackets the non-atomic span and every reader refuses while it
-    exists. Append mode sets the marker BEFORE the data append (the only
-    silent window is data-landed-sketch-missing); overwrite mode sets it
-    right AFTER (the data overwrite wipes the whole dir, so a crash
-    before the marker leaves ``_sketches/`` absent — already fail-loud).
-    A crashed write therefore always reads as loud-broken until
+    Crash consistency (ADVICE r11 #1) and the width ``w`` follow the one
+    protocol and width rule of the module docstring: append brackets the
+    data append too (the only silent window is data-landed-sketch-
+    missing), overwrite sets the marker right after its data write. A
+    crashed write reads as loud-broken until
     :func:`rebuild_table_sketches` republishes from a full scan.
 
     Erasure interplay (ADVICE r11 #2): an append over an erasure
@@ -140,22 +338,13 @@ def write_table_with_sketches(
     broadcast-vs-shuffle choice (:func:`decision_from_metadata`) then
     reads two ≤ d·w counter tables instead of scanning either input —
     per-day/per-partition sketches merge by the same SUM."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from pyspark.storagelevel import StorageLevel
-
-    from dwh_etl_framework_spark.operators.sketch import (
-        CMS_W,
-        cms_sketch,
-        hll_registers,
-    )
-
-    eff_w = int(w or CMS_W)
     spark = df.sparkSession
     overwrite = mode == "overwrite"
-    pending = f"{path}/{SKETCH_DIR}/{PENDING_PREFIX}{uuid.uuid4().hex}"
+    if not overwrite:
+        _refuse_if_pending(spark, path)  # don't compound a crash
+    widths = _fragment_widths(
+        spark, path, sketch_keys, w, "overwrite" if overwrite else "append"
+    )
     # One materialization serves the table write AND every sketch pass:
     # without it, each cms/hll build re-executes the DataFrame's full
     # lineage (2 extra passes per key — a landed master's whole merge
@@ -163,55 +352,15 @@ def write_table_with_sketches(
     # sketches describe different data than was landed (review r11).
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        if not overwrite:
-            _refuse_if_pending(spark, path)  # don't compound a crash
-            _touch(spark, pending)
-        write_table(df, path, fmt=fmt, mode=mode, **kwargs)
-        if overwrite:
-            _touch(spark, pending)
-        _, tombstones = _sketch_markers(spark, path)
-        for col in sketch_keys:
-            sk = cms_sketch(df.select(col), col, eff_w).withColumn(
-                "__cms_w", F.lit(eff_w)
-            )
-            sk.coalesce(1).write.mode(mode).parquet(
-                f"{path}/{SKETCH_DIR}/{col}"
-            )
-            if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
-                continue  # see "Erasure interplay" above
-            # NDV tier: per-key HLL registers (MAX-mergeable, so appended
-            # fragments merge-on-read like the CMS counters SUM). NDV
-            # feeds the System-R join-output estimate
-            # (:func:`ndv_join_estimate`) — the TIGHT companion to the
-            # CMS inner product's SAFE bound.
-            regs = hll_registers(df.select(col), [], col)
-            regs.coalesce(1).write.mode(mode).parquet(
-                f"{path}/{SKETCH_DIR}/{col}__hll"
-            )
-        fs, p = _hadoop_fs(spark, pending)
-        if fs.exists(p) and not fs.delete(p, False):
-            raise IOError(f"failed to clear the pending marker {pending}")
+        _commit(
+            spark,
+            f"{path}/{SKETCH_DIR}",
+            lambda: write_table(df, path, fmt=fmt, mode=mode, **kwargs),
+            lambda: _write_key_fragments(df, path, widths, mode),
+            data_wipes_meta=overwrite,
+        )
     finally:
         df.unpersist()
-
-
-def _persisted_sketch_width(spark, path: str, col: str) -> int | None:
-    """The ``__cms_w`` the landed fragments for ``col`` carry, or None if
-    no fragment exists yet. Raises on mixed widths (a crashed mixed
-    write needs an explicit rebuild)."""
-    fs, p = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}/{col}")
-    if not fs.exists(p):
-        return None
-    raw = spark.read.option("recursiveFileLookup", "true").parquet(
-        f"{path}/{SKETCH_DIR}/{col}"
-    )
-    widths = [r["__cms_w"] for r in raw.select("__cms_w").distinct().collect()]
-    if len(widths) > 1:
-        raise ValueError(
-            f"mixed persisted widths {sorted(widths)} for {col!r} at "
-            f"{path!r} — rebuild_table_sketches(w=...) to repair"
-        )
-    return int(widths[0]) if widths else None
 
 
 def write_partition_with_sketches(
@@ -235,93 +384,42 @@ def write_partition_with_sketches(
       ``partition_by`` values (validated — the combination names the
       fragment subdirectory, e.g. ``_sketches/<col>/part_day=2024-01-05``).
     - the data lands under Spark's DYNAMIC partition-overwrite mode, so
-      ``mode("overwrite")`` replaces only the touched hive partition
-      (the conf is set for the write and restored after);
+      ``mode("overwrite")`` replaces only the touched hive partition;
     - each key's CMS/HLL fragments land with ``mode("overwrite")`` in
       the partition-named subdirectory — same idempotence contract as
       ``subtract_table_sketch``'s ``erasure_<id>`` fragments; readers
       merge-on-read recursively, so per-partition fragments SUM (CMS) /
       MAX (HLL) to exactly the whole table's sketch;
-    - a ``_pending`` marker brackets the non-atomic span exactly like
-      :func:`write_table_with_sketches` append mode, and the erasure
-      tombstone interplay is identical (no HLL fragment over a
-      tombstone).
+    - the marker bracket and the erasure tombstone interplay are those
+      of :func:`write_table_with_sketches` append mode.
 
-    Width adopts the landed fragments' ``__cms_w`` when ``w`` is not
-    given; an explicit conflicting ``w`` raises rather than stranding
-    unmergeable fragments. Returns the partition tag."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from pyspark.storagelevel import StorageLevel
-
-    from dwh_etl_framework_spark.operators.sketch import (
-        CMS_W,
-        cms_sketch,
-        hll_registers,
-    )
-
+    Width follows the module's width rule: omitting ``w`` adopts the
+    landed width, and an explicit conflicting ``w`` raises rather than
+    stranding unmergeable fragments. Returns the partition tag."""
     if not partition_by:
         raise ValueError("write_partition_with_sketches requires partition_by")
     spark = df.sparkSession
     _refuse_if_pending(spark, path)  # don't compound a crash
+    widths = _fragment_widths(spark, path, sketch_keys, w, "partition")
+
+    def tag_of(combo) -> str:
+        return "part_" + "_".join(f"{c}={combo[c]}" for c in partition_by)
+
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        combos = df.select(*partition_by).distinct().collect()
-        if len(combos) != 1:
-            raise ValueError(
-                f"df holds {len(combos)} distinct {partition_by} combinations"
-                " — write_partition_with_sketches lands exactly one partition"
-                " per call (split the input by partition first)"
-            )
-        tag = "part_" + "_".join(
-            f"{c}={combos[0][c]}" for c in partition_by
+        combo = _overwrite_one_partition(
+            df,
+            path,
+            partition_by,
+            f"{path}/{SKETCH_DIR}",
+            lambda combo: _write_key_fragments(
+                df, path, widths, "overwrite", sub=f"/{tag_of(combo)}"
+            ),
+            fmt=fmt,
         )
-        eff_w = int(w or CMS_W)
-        for col in sketch_keys:
-            landed = _persisted_sketch_width(spark, path, col)
-            if landed is not None:
-                if w is not None and int(w) != landed:
-                    raise ValueError(
-                        f"explicit w={w} conflicts with the landed width "
-                        f"{landed} for {col!r} at {path!r}"
-                    )
-                eff_w = landed
-        pending = f"{path}/{SKETCH_DIR}/{PENDING_PREFIX}{uuid.uuid4().hex}"
-        _touch(spark, pending)
-        previous = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            write_table(
-                df, path, fmt=fmt, mode="overwrite", partition_by=partition_by
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", previous
-            )
-        _, tombstones = _sketch_markers(spark, path)
-        for col in sketch_keys:
-            sk = cms_sketch(df.select(col), col, eff_w).withColumn(
-                "__cms_w", F.lit(eff_w)
-            )
-            sk.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}/{tag}"
-            )
-            if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
-                continue  # see write_table_with_sketches "Erasure interplay"
-            regs = hll_registers(df.select(col), [], col)
-            regs.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}__hll/{tag}"
-            )
-        fs, p = _hadoop_fs(spark, pending)
-        if fs.exists(p) and not fs.delete(p, False):
-            raise IOError(f"failed to clear the pending marker {pending}")
     finally:
         df.unpersist()
-    return tag
+    return tag_of(combo)
 
 
 def rebuild_table_sketches(
@@ -341,69 +439,29 @@ def rebuild_table_sketches(
     Markers are cleared LAST, so a crash mid-rebuild leaves the
     metadata loud-broken (re-run to finish), never silently partial.
     Returns the rebuilt key list. ``sketch_keys`` defaults to the keys
-    with existing sketch dirs; ``w`` defaults to each key's persisted
-    width when unambiguous (mixed-width fragments from a crash require
-    an explicit ``w``)."""
-    from pyspark.sql import functions as F
+    with existing sketch dirs; ``w`` defaults to each key's landed
+    width, or ``CMS_W`` for a key without fragments. Mixed-width
+    fragments from a crash require an explicit ``w``, and a fragment
+    directory that cannot be read raises rather than being rebuilt at a
+    guessed width."""
+    from dwh_etl_framework_spark.operators.sketch import CMS_W
 
-    from pyspark.storagelevel import StorageLevel
-
-    from dwh_etl_framework_spark.operators.sketch import (
-        CMS_W,
-        cms_sketch,
-        hll_registers,
-    )
-
-    fs, sk_root = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}")
     if sketch_keys is None:
-        if not fs.exists(sk_root):
-            raise ValueError(
-                f"no sketch dir at {path!r} — pass sketch_keys explicitly"
-            )
-        sketch_keys = sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(sk_root)
-            if st.isDirectory() and not st.getPath().getName().endswith("__hll")
-        )
+        sketch_keys = _key_dirs(spark, path)
     if not sketch_keys:
-        raise ValueError(f"nothing to rebuild under {path!r}")
-
-    def _width_for(col: str) -> int:
-        if w is not None:
-            return int(w)
-        try:
-            raw = spark.read.option("recursiveFileLookup", "true").parquet(
-                f"{path}/{SKETCH_DIR}/{col}"
-            )
-            widths = [
-                r["__cms_w"] for r in raw.select("__cms_w").distinct().collect()
-            ]
-        except Exception:
-            return CMS_W
-        if len(widths) > 1:
-            raise ValueError(
-                f"mixed persisted widths {sorted(widths)} for {col!r} — "
-                "pass w= explicitly to rebuild_table_sketches"
-            )
-        return int(widths[0]) if widths else CMS_W
-
+        raise ValueError(
+            f"no sketched keys under {path!r} — pass sketch_keys explicitly"
+        )
+    widths = {
+        col: int(w or _landed_width(spark, path, col) or CMS_W)
+        for col in sketch_keys
+    }
     df = spark.read.format(fmt).load(path).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        for col in sketch_keys:
-            eff_w = _width_for(col)
-            sk = cms_sketch(df.select(col), col, eff_w).withColumn(
-                "__cms_w", F.lit(eff_w)
-            )
-            sk.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}"
-            )
-            regs = hll_registers(df.select(col), [], col)
-            regs.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}__hll"
-            )
+        _write_key_fragments(df, path, widths, "overwrite", tombstones=())
     finally:
         df.unpersist()
-    pending, tombstones = _sketch_markers(spark, path)
+    pending, tombstones = _markers(spark, f"{path}/{SKETCH_DIR}")
     for name in pending + tombstones:
         mfs, mp = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}/{name}")
         if mfs.exists(mp) and not mfs.delete(mp, False):
@@ -418,45 +476,21 @@ def read_table_sketch(spark, path: str, col: str) -> tuple[DataFrame, int]:
     different ``w`` do not merge — the plans/steps width guard) as well
     as a crashed unpublished write (pending marker — the data dir may
     hold rows no fragment covers)."""
-    from pyspark.sql import functions as F
-
     _refuse_if_pending(spark, path)
-    # recursive: erasure corrections live in erasure_<id> subdirectories
-    # (idempotent overwrite targets) next to the top-level fragments
-    raw = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(f"{path}/{SKETCH_DIR}/{col}")
-    )
-    widths = [r["__cms_w"] for r in raw.select("__cms_w").distinct().collect()]
-    if len(widths) != 1:
-        raise ValueError(
-            f"sketch fragments for {col!r} at {path!r} carry mixed widths "
-            f"{sorted(widths)} — rewrite the sketch dir at one width"
-        )
-    merged = raw.groupBy("r", "col").agg(
+    w = _landed_width(spark, path, col)
+    if w is None:
+        raise FileNotFoundError(f"no sketch fragments for {col!r} at {path!r}")
+    merged = _fragments(spark, path, col).groupBy("r", "col").agg(
         F.sum("cnt").cast("long").alias("cnt")
     )
-    return merged, int(widths[0])
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+    return merged, w
 
 
 def sketched_keys(spark, path: str) -> list[str]:
     """The key columns a landed table carries sketches for (the
     ``_sketches/`` child dirs, HLL siblings excluded)."""
     _refuse_if_pending(spark, path)
-    fs, hpath = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}")
-    if not fs.exists(hpath):
-        return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(hpath)
-        if st.isDirectory() and not st.getPath().getName().endswith("__hll")
-    )
+    return _key_dirs(spark, path)
 
 
 def subtract_table_sketch(
@@ -484,8 +518,6 @@ def subtract_table_sketch(
       erasure (crash recovery, at-least-once orchestration) REPLACES its
       fragment instead of double-subtracting. ``erasure_id`` must
       uniquely name the erasure batch (e.g. the request id)."""
-    from pyspark.sql import functions as F
-
     from dwh_etl_framework_spark.operators.sketch import cms_sketch
 
     keys = cols if cols is not None else sketched_keys(spark, path)
@@ -523,47 +555,9 @@ def read_table_ndv(spark, path: str, col: str) -> int:
 
     Refuses loudly while the key carries an erasure tombstone or the
     table a pending-write marker: MAX registers can't subtract, so a
-    post-erasure NDV needs a full rebuild first."""
-    from pyspark.sql import functions as F
-
-    from dwh_etl_framework_spark.operators.sketch import hll_estimate
-
-    _refuse_if_pending(spark, path)
-    _, tombstones = _sketch_markers(spark, path)
-    if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
-        raise IOError(
-            f"the NDV tier for {col!r} at {path!r} was invalidated by a "
-            "right-to-erasure rewrite (MAX registers cannot subtract) — "
-            "run rebuild_table_sketches() to rescan, or overwrite the "
-            "table with a fresh sketched write"
-        )
-    # recursive: per-partition fragments (write_partition_with_sketches)
-    # live in part_* subdirectories; MAX-merge is the HLL union
-    raw = spark.read.option("recursiveFileLookup", "true").parquet(
-        f"{path}/{SKETCH_DIR}/{col}__hll"
-    )
-    merged = raw.groupBy("bucket").agg(F.max("reg").alias("reg"))
-    row = hll_estimate(merged, []).first()
-    # Flajolet's small-range (linear counting) correction: driver-side
-    # float math is fine here — the NDV is a costing statistic, not an
-    # oracle value (the oracled x84 twin pins the integer-only raw
-    # formula instead).
-    return _ndv_linear_correct(int(row["hll_estimate"]), int(row["n_buckets_used"]))
-
-
-def _ndv_linear_correct(est: int, n_buckets_used: int) -> int:
-    """Flajolet's small-range (linear counting) correction shared by
-    :func:`read_table_ndv` and the batched :func:`read_chain_stats` —
-    the raw estimator is biased below ~2.5m; with empty registers,
-    m·ln(m/V) is the better estimate."""
-    import math
-
-    from dwh_etl_framework_spark.operators.sketch import HLL_M
-
-    empty = HLL_M - n_buckets_used
-    if est < 5 * HLL_M // 2 and empty > 0:
-        return int(round(HLL_M * math.log(HLL_M / empty)))
-    return est
+    post-erasure NDV needs a full rebuild first. One
+    :func:`read_chain_stats` read."""
+    return read_chain_stats(spark, [], [(path, col)])[1][0]
 
 
 def read_chain_stats(
@@ -572,30 +566,31 @@ def read_chain_stats(
     ndvs: list[tuple[str, str]],
 ) -> tuple[list[int], list[int]]:
     """Batched metadata reads for the join-order planners (round 15,
-    guide §5 "the driver should do almost no data work"): the former
-    per-statistic ``read_table_sketch`` + ``cms_cardinality().first()``
-    and ``read_table_ndv`` calls each launched their own tiny Spark job
-    (scan + agg + collect over ≤ d·w counter / m register rows), so
-    planning a k-table chain cost ~2k driver round-trips dominated by
-    fixed per-job overhead — measured ~3 s per warm f40 call at sf0.1.
-    This reader unions every per-statistic single-row aggregate into ONE
-    plan and collects once; the statistics, the mixed-width guard and
-    the pending/tombstone refusals are unchanged (same arithmetic, same
-    error classes — the width check reads the same ``__cms_w`` values,
-    the NDV applies the same linear-counting correction driver-side).
+    guide §5 "the driver should do almost no data work"): every
+    per-statistic single-row aggregate (scan + agg over ≤ d·w counter /
+    m register rows) is unioned into ONE plan and collected once, where
+    separate reads would each launch their own tiny Spark job — planning
+    a k-table chain that way cost ~2k driver round-trips dominated by
+    fixed per-job overhead, measured ~3 s per warm f40 call at sf0.1.
+    Refuses a pending marker, an erasure-tombstoned NDV tier and mixed
+    CMS widths; the NDV applies Flajolet's small-range correction
+    driver-side.
 
     ``counts``: (table_path, key) pairs → exact row counts from the CMS
     tier. ``ndvs``: (table_path, key) pairs → HLL NDVs. Returns the two
     result lists in input order."""
-    from pyspark.sql import functions as F
+    from dwh_etl_framework_spark.operators.sketch import (
+        CMS_D,
+        HLL_M,
+        hll_estimate,
+    )
 
-    from dwh_etl_framework_spark.operators.sketch import CMS_D, hll_estimate
-
-    for path in {p for p, _ in counts} | {p for p, _ in ndvs}:
-        _refuse_if_pending(spark, path)
+    tombstones = {
+        p: _refuse_if_pending(spark, p)
+        for p in dict.fromkeys(p for p, _ in [*counts, *ndvs])
+    }
     for path, col in ndvs:
-        _, tombstones = _sketch_markers(spark, path)
-        if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
+        if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones[path]:
             raise IOError(
                 f"the NDV tier for {col!r} at {path!r} was invalidated by "
                 "a right-to-erasure rewrite (MAX registers cannot "
@@ -605,20 +600,18 @@ def read_chain_stats(
 
     frames = []
     for i, (path, col) in enumerate(counts):
-        raw = spark.read.option("recursiveFileLookup", "true").parquet(
-            f"{path}/{SKETCH_DIR}/{col}"
-        )
         frames.append(
-            raw.agg(
+            _fragments(spark, path, col).agg(
                 (F.sum("cnt") / F.lit(CMS_D)).cast("long").alias("n"),
                 F.collect_set("__cms_w").cast("array<long>").alias("aux"),
             ).select(F.lit(f"c{i}").alias("tag"), "n", "aux")
         )
     for i, (path, col) in enumerate(ndvs):
-        raw = spark.read.option("recursiveFileLookup", "true").parquet(
-            f"{path}/{SKETCH_DIR}/{col}__hll"
+        merged = (
+            _fragments(spark, path, f"{col}__hll")
+            .groupBy("bucket")
+            .agg(F.max("reg").alias("reg"))
         )
-        merged = raw.groupBy("bucket").agg(F.max("reg").alias("reg"))
         frames.append(
             hll_estimate(merged, []).select(
                 F.lit(f"d{i}").alias("tag"),
@@ -635,18 +628,19 @@ def read_chain_stats(
 
     ns: list[int] = []
     for i, (path, col) in enumerate(counts):
-        r = rows[f"c{i}"]
-        widths = sorted(r["aux"])
-        if len(widths) != 1:
-            raise ValueError(
-                f"sketch fragments for {col!r} at {path!r} carry mixed "
-                f"widths {widths} — rewrite the sketch dir at one width"
-            )
-        ns.append(int(r["n"]))
+        _one_width(rows[f"c{i}"]["aux"], path, col)
+        ns.append(int(rows[f"c{i}"]["n"]))
     ds: list[int] = []
     for i, _ in enumerate(ndvs):
-        r = rows[f"d{i}"]
-        ds.append(_ndv_linear_correct(int(r["n"]), int(r["aux"][0])))
+        est, empty = int(rows[f"d{i}"]["n"]), HLL_M - int(rows[f"d{i}"]["aux"][0])
+        # Flajolet's small-range (linear counting) correction: the raw
+        # estimator is biased below ~2.5m; with empty registers,
+        # m·ln(m/V) is the better estimate. Driver-side float math is
+        # fine — the NDV is a costing statistic, not an oracle value
+        # (the oracled x84 twin pins the integer-only raw formula).
+        if est < 5 * HLL_M // 2 and empty > 0:
+            est = int(round(HLL_M * math.log(HLL_M / empty)))
+        ds.append(est)
     return ns, ds
 
 
@@ -661,7 +655,8 @@ def ndv_join_estimate(
     persisted metadata alone: ``n_l · n_r / max(ndv_l, ndv_r)`` —
     row counts recovered exactly from the CMS counters
     (:func:`~dwh_etl_framework_spark.operators.sketch.cms_cardinality`),
-    distinct counts from the HLL tier.
+    distinct counts from the HLL tier, in one :func:`read_chain_stats`
+    read.
 
     Division of labor (NOTES r10 weakness #5): the CMS inner product
     NEVER undercounts, so exchanges size from it; this estimate is
@@ -669,14 +664,8 @@ def ndv_join_estimate(
     but assumes per-key uniformity and key containment, so it CAN
     undercount under skew — use it for costing/comparison, never for
     the never-undercounts exchange sizing."""
-    from dwh_etl_framework_spark.operators.sketch import cms_cardinality
-
-    lsk, _ = read_table_sketch(spark, left_path, left_key)
-    rsk, _ = read_table_sketch(spark, right_path, right_key)
-    n_l = int(cms_cardinality(lsk).first()["n_rows"])
-    n_r = int(cms_cardinality(rsk).first()["n_rows"])
-    ndv_l = read_table_ndv(spark, left_path, left_key)
-    ndv_r = read_table_ndv(spark, right_path, right_key)
+    sides = [(left_path, left_key), (right_path, right_key)]
+    (n_l, n_r), (ndv_l, ndv_r) = read_chain_stats(spark, sides, sides)
     denom = max(ndv_l, ndv_r, 1)
     return {
         "n_left": n_l,
@@ -699,40 +688,32 @@ def choose_join_order_from_metadata(
     key_mr)``, ``right=(path, key_mr)``; the chain is
     left ⋈(key_lm) mid ⋈(key_mr) right.
 
-    Row counts are EXACT from the CMS tier (Σcnt = d·N), NDVs from the
-    HLL tier, and the Selinger intermediate-size arithmetic is the
-    x109 spec verbatim — ``tests/test_join_order.py`` pins this result
-    equal to the oracled inline computation. Python's unbounded ints do
-    the products, so (unlike the BIGINT-certified query) this entry
-    point has no 2^63 ceiling. Costing-tier caveat inherited from
-    :func:`ndv_join_estimate`: the NDV estimate assumes per-key
-    uniformity — use the CMS bound, not this, to SIZE exchanges."""
-    lp, k_lm = left
-    mp, mk_lm, mk_mr = mid
-    rp, k_mr = right
-
-    # one batched job for all 3 counts + 4 NDVs (round 15 — see
-    # read_chain_stats; formerly 7 sequential driver round-trips)
-    ns, raw_ds = read_chain_stats(
-        spark,
-        counts=[(lp, k_lm), (mp, mk_lm), (rp, k_mr)],
-        ndvs=[(lp, k_lm), (mp, mk_lm), (mp, mk_mr), (rp, k_mr)],
+    The 3-table case of :func:`choose_chain_join_order_from_metadata`
+    (one batched metadata read): row counts are EXACT from the CMS tier
+    (Σcnt = d·N), NDVs from the HLL tier, and the Selinger
+    intermediate-size arithmetic is the x109 spec verbatim —
+    ``tests/test_join_order.py`` pins this result equal to the oracled
+    inline computation. ``lm_first`` wins ties, as the chain DP extends
+    on the right. Python's unbounded ints do the products, so (unlike
+    the BIGINT-certified query) this entry point has no 2^63 ceiling.
+    Costing-tier caveat inherited from :func:`ndv_join_estimate`: the
+    NDV estimate assumes per-key uniformity — use the CMS bound, not
+    this, to SIZE exchanges."""
+    from dwh_etl_framework_spark.operators.sketch import (
+        chain_interval_estimates,
     )
-    n_l, n_m, n_r = ns
-    d_lm = max(raw_ds[0], raw_ds[1], 1)
-    d_mr = max(raw_ds[2], raw_ds[3], 1)
-    est_lm = (n_l * n_m + d_lm - 1) // d_lm
-    est_mr = (n_m * n_r + d_mr - 1) // d_mr
-    est_final = (est_lm * n_r + d_mr - 1) // d_mr
-    chosen = "lm_first" if est_lm <= est_mr else "mr_first"
+
+    chain = choose_chain_join_order_from_metadata(spark, [left, mid, right])
+    est = chain_interval_estimates(chain["n_rows"], chain["edge_ndvs"])
+    n_l, n_m, n_r = chain["n_rows"]
     return {
         "n_left": n_l,
         "n_mid": n_m,
         "n_right": n_r,
-        "est_lm_first": est_lm,
-        "est_mr_first": est_mr,
-        "est_final_rows": est_final,
-        "chosen": chosen,
+        "est_lm_first": est[(0, 1)],
+        "est_mr_first": est[(1, 2)],
+        "est_final_rows": chain["est_final"],
+        "chosen": "lm_first" if chain["order"][0] == 0 else "mr_first",
     }
 
 

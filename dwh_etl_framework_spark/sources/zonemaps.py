@@ -21,12 +21,14 @@ make every failure loud:
   matches the data directory's. The bulk landing is overwrite-only and
   writes the map LAST: a crash leaves either no map or a partial map
   (subset ⇒ set mismatch) — both loud.
-- :func:`land_fragment_with_zonemap` (the incremental re-land, the
-  ``write_partition_with_sketches`` protocol) brackets its non-atomic span
-  — replace data fragment, then replace its map row — with a
-  ``_zonemaps/_pending_<id>`` marker that readers refuse on: between the
-  two writes the OLD map row would otherwise bound the NEW data, exactly
-  the silent under-coverage the tier must never serve.
+- :func:`land_fragment_with_zonemap` (the incremental re-land) runs the
+  one landing protocol of ``sources/sinks.py`` (module docstring there):
+  the single-partition overwrite of ``write_partition_with_sketches``,
+  inside the marker bracket — replace data fragment, then append its map
+  row — with the marker at ``_zonemaps/_pending_<id>``. Readers refuse
+  while it exists: between the two writes the OLD map row would otherwise
+  bound the NEW data, exactly the silent under-coverage the tier must
+  never serve.
 
 Reference anchor: the reference's landing dirs are scanned whole every time
 (``airflow_etl.py:433-450``); pruning was left entirely to Greenplum.
@@ -39,7 +41,13 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dwh_etl_framework_spark.sources.sinks import _hadoop_fs
+from dwh_etl_framework_spark.sources import sinks
+from dwh_etl_framework_spark.sources.sinks import (
+    _hadoop_fs,
+    _markers,
+    _overwrite_one_partition,
+    _refuse_if_pending,
+)
 
 #: hidden metadata dir inside the table path — underscore prefix keeps a
 #: plain ``spark.read.parquet(table)`` from ever seeing the map rows (the
@@ -48,6 +56,11 @@ ZONEMAP_DIR = "_zonemaps"
 
 #: hive partition column carrying the fragment id in the data layout.
 FRAGMENT_COL = "__fragment"
+
+_REPAIR = (
+    "Re-run the fragment landing (or the bulk write_table_with_zonemaps) "
+    "to republish."
+)
 
 
 def write_table_with_zonemaps(
@@ -82,11 +95,8 @@ def write_table_with_zonemaps(
     """
     df = df.persist()
     try:
-        (
-            df.repartition(fragment_col)
-            .write.mode("overwrite")
-            .partitionBy(fragment_col)
-            .parquet(path)
+        sinks.write_table(
+            df, path, mode="overwrite", partition_by=[fragment_col]
         )
         _zonemap_rows(df, stats_cols, fragment_col, gen=0).coalesce(
             1
@@ -126,19 +136,6 @@ def _current_zonemap(spark: SparkSession, path: str) -> tuple[list, int]:
     return [best[k] for k in sorted(best)], len(raw)
 
 
-def _zonemap_pending(spark: SparkSession, path: str) -> list[str]:
-    from dwh_etl_framework_spark.sources.sinks import PENDING_PREFIX
-
-    fs, p = _hadoop_fs(spark, f"{path}/{ZONEMAP_DIR}")
-    if not fs.exists(p):
-        return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(p)
-        if st.isFile() and st.getPath().getName().startswith(PENDING_PREFIX)
-    )
-
-
 def land_fragment_with_zonemap(
     df: DataFrame,
     path: str,
@@ -148,8 +145,8 @@ def land_fragment_with_zonemap(
     """Idempotently re-land ONE fragment of a zone-mapped table — the
     100 TB incremental shape (a daily/partition ingest re-run replaces
     the fragment's data AND its zone-map row instead of serving stale
-    bounds), the ``write_partition_with_sketches`` protocol
-    (``sources/sinks.py:217``).
+    bounds), by the landing protocol of ``sources/sinks.py`` (its
+    module docstring).
 
     Mechanics: ``df`` must hold exactly ONE distinct fragment id
     (validated); the data lands under dynamic partition-overwrite so only
@@ -158,26 +155,16 @@ def land_fragment_with_zonemap(
     resolve latest-generation-per-fragment (:func:`_current_zonemap`), so
     the append IS the pointer flip, and a crashed append publishes
     nothing (files appear at job commit). The span between the two
-    writes is bracketed by a ``_pending_<id>`` marker that
-    :func:`read_table_pruned` refuses on — the old map row does NOT
+    writes is inside the marker bracket (``_zonemaps/_pending_<id>``),
+    which :func:`read_table_pruned` refuses on — the old map row does NOT
     bound the new data, so serving it would silently drop rows (module
     docstring). Stats columns must match the landed map's (checked
     against the map schema) — a re-land cannot narrow the tier.
     Single-writer per table, like every landing protocol in this repo.
 
     Returns the fragment id that was replaced."""
-    import uuid
-
-    from dwh_etl_framework_spark.sources.sinks import PENDING_PREFIX
-
     spark = df.sparkSession
-    pending = _zonemap_pending(spark, path)
-    if pending:
-        raise IOError(
-            f"zone map at {path!r} is inconsistent: a fragment re-land "
-            f"crashed mid-span ({pending}) — re-run the fragment landing "
-            "(or the bulk write_table_with_zonemaps) to republish."
-        )
+    _refuse_if_pending(spark, path, ZONEMAP_DIR, _REPAIR)
     landed, _ = _current_zonemap(spark, path)
     want = {f"{c}__{m}" for c in stats_cols for m in ("min", "max")}
     have = {
@@ -195,43 +182,20 @@ def land_fragment_with_zonemap(
     next_gen = max((int(r["__gen"]) for r in landed), default=0) + 1
     df = df.persist()
     try:
-        combos = df.select(fragment_col).distinct().collect()
-        if len(combos) != 1:
-            raise ValueError(
-                f"df holds {len(combos)} distinct {fragment_col} values — "
-                "land_fragment_with_zonemap lands exactly one fragment per "
-                "call (split the input by fragment first)"
-            )
-        frag_id = int(combos[0][0])
-        marker = f"{path}/{ZONEMAP_DIR}/{PENDING_PREFIX}{uuid.uuid4().hex}"
-        fs, mp = _hadoop_fs(spark, marker)
-        fs.create(mp, True).close()
-        previous = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                df.repartition(fragment_col)
-                .write.mode("overwrite")
-                .partitionBy(fragment_col)
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", previous
-            )
-        (
-            _zonemap_rows(df, stats_cols, fragment_col, gen=next_gen)
+        combo = _overwrite_one_partition(
+            df,
+            path,
+            [fragment_col],
+            f"{path}/{ZONEMAP_DIR}",
+            lambda _: _zonemap_rows(df, stats_cols, fragment_col, next_gen)
             .coalesce(1)
             .write.mode("append")
-            .parquet(f"{path}/{ZONEMAP_DIR}")
+            .parquet(f"{path}/{ZONEMAP_DIR}"),
+            what="fragment",
         )
-        if fs.exists(mp) and not fs.delete(mp, False):
-            raise IOError(f"failed to clear the pending marker {marker}")
     finally:
         df.unpersist()
-    return frag_id
+    return int(combo[0])
 
 
 def compact_table_zonemaps(spark: SparkSession, path: str) -> dict:
@@ -268,12 +232,7 @@ def compact_table_zonemaps(spark: SparkSession, path: str) -> dict:
     microseconds still requires the scheduling contract.
 
     Returns ``{"rows_before": …, "rows_after": …}``."""
-    pending = _zonemap_pending(spark, path)
-    if pending:
-        raise IOError(
-            f"zone map at {path!r} has a pending fragment re-land "
-            f"({pending}) — finish or republish it before compacting."
-        )
+    _refuse_if_pending(spark, path, ZONEMAP_DIR, _REPAIR)
     map_path = f"{path}/{ZONEMAP_DIR}"
     src = spark.read.parquet(map_path)
     schema = src.schema
@@ -285,7 +244,7 @@ def compact_table_zonemaps(spark: SparkSession, path: str) -> dict:
     # concurrent re-land either still holds its _pending_ marker or has
     # already appended its superseding rows — both abort the compaction
     # before the overwrite can swallow them
-    pending = _zonemap_pending(spark, path)
+    pending, _ = _markers(spark, map_path)
     recount = spark.read.parquet(map_path).count()
     if pending or recount != rows_before:
         raise IOError(
@@ -335,14 +294,7 @@ def read_table_pruned(
     bound the new data). Cost: one tiny metadata read + one dir listing —
     no data file is touched for the decision.
     """
-    pending = _zonemap_pending(spark, path)
-    if pending:
-        raise IOError(
-            f"zone map at {path!r} is inconsistent: a fragment re-land "
-            f"crashed mid-span ({pending}) — its map row may not bound the "
-            "fragment's data. Re-run the fragment landing (or the bulk "
-            "write_table_with_zonemaps) to republish."
-        )
+    _refuse_if_pending(spark, path, ZONEMAP_DIR, _REPAIR)
     rows, map_rows = _current_zonemap(spark, path)  # metadata-sized
     cols = rows[0].__fields__ if rows else []
     for c in intervals:

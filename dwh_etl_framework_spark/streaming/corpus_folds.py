@@ -322,7 +322,7 @@ def update_phrase_postings(
     point: no guard needed (the update_quota class). The state is the
     workload's postings slice (Σ df(word) rows, positions + short
     terms); document text never persists."""
-    from dwh_etl_framework_spark.queries.wave16 import phrase_postings
+    from dwh_etl_framework_spark.operators.phrase import phrase_postings
 
     contrib = phrase_postings(batch, text_col, id_col, phrases)
     if state is not None:
@@ -366,7 +366,7 @@ def current_phrase_matches(
     """The live x102 report from the persisted postings (None before
     the first batch lands) — the SAME match plan the batch query runs,
     over the streamed index instead of a corpus scan."""
-    from dwh_etl_framework_spark.queries.wave16 import phrase_matches
+    from dwh_etl_framework_spark.operators.phrase import phrase_matches
 
     stored = state.read()
     if stored is None:

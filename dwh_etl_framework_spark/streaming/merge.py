@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dwh_etl_framework_spark.operators.merge import (
     JournalSpec,
+    empty_master,
     merge_delta,
     stamp_journal_columns,
 )
@@ -185,9 +186,7 @@ def stream_merge_to_master(
         stamped = stamp_journal_columns(batch_df, transform_dt)
         master = state.read()
         if master is None:
-            master = stamped.limit(0).drop(
-                "__transform_dt", "__load_dt", "__seqno", "__record_state"
-            )
+            master = empty_master(stamped)
         state.write(merge_delta(master, stamped, spec))
 
     return (

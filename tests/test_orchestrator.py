@@ -112,3 +112,46 @@ def test_to_airflow_requires_airflow(spark):
             to_airflow(dag=None, tasks=tasks)
     else:  # pragma: no cover - container has no airflow
         pytest.skip("airflow installed; adapter exercised elsewhere")
+
+
+def test_orchestrated_refresh_releases_step_caches_of_landed_tables(
+    spark, tmp_path
+):
+    """The DAG path frees what a refresh pinned, like run_pipeline_config:
+    a ``cache: true`` step and the join planner's two sketch checkpoints
+    pin three RDDs per refresh, released once the DAG has finished, so
+    three orchestrated refreshes leave the persistent-RDD count flat."""
+    sf = ORDERS.rsplit("/", 1)[0]
+
+    def persistent_rdds() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def dep(alias):
+        return {"alias": alias, "format": "parquet",
+                "path": f"{sf}/{alias}.parquet"}
+
+    stg = {"type": "select", "alias": "stg", "cache": True, "sql": (
+        "SELECT l.l_partkey, l.l_quantity FROM lineitem l JOIN orders o "
+        "ON l.l_orderkey = o.o_orderkey")}
+    mart = {"type": "select", "join_strategy": {
+        "left": "stg", "right": "part",
+        "left_key": "l_partkey", "right_key": "p_partkey"}, "sql": (
+        "SELECT p.p_partkey, SUM(s.l_quantity) AS qty FROM stg s "
+        "JOIN part p ON s.l_partkey = p.p_partkey GROUP BY p.p_partkey")}
+    config = parse_pipeline_config({"tables": [{
+        "target": "mart.part_qty_dag", "primary_key": ["p_partkey"],
+        "dependencies": [dep("lineitem"), dep("orders"), dep("part")],
+        "transform": {"full": [stg, mart]},
+        "landing": {"path": str(tmp_path / "part_qty")},
+    }]})
+    before = persistent_rdds()
+    counts = []
+    for _ in range(3):
+        done = run_tasks(
+            build_table_tasks(spark, config, transform_dt=datetime(2024, 1, 1))
+        )
+        counts.append(len(persistent_rdds() - before))
+    assert counts == [0, 0, 0]
+    assert done["mart.part_qty_dag"].step_caches == []
+    landed = spark.read.parquet(str(tmp_path / "part_qty")).count()
+    assert done["mart.part_qty_dag"].master.count() == landed

@@ -302,9 +302,9 @@ def _run_phrase_index(spark, src, state_path, ckpt):
 
 
 def test_stream_phrase_index_equals_batch_x102(spark, tmp_path):
+    from dwh_etl_framework_spark.operators.phrase import phrase_vocab
     from dwh_etl_framework_spark.queries.wave16 import (
         PHRASES,
-        phrase_vocab,
         x102_phrase_search,
     )
     from dwh_etl_framework_spark.streaming.corpus_folds import (
